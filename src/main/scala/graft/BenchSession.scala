@@ -9,11 +9,12 @@ import org.apache.spark.sql.SparkSession
   *
   * Master/parallelism honor `$SPARK_GRAFT_CPUS` (the driver re-runs the
   * bench at a lower core count to measure scaling — a hard-coded master
-  * would ruin that measurement).
+  * would ruin that measurement), and default to this host's core count.
   */
 object BenchSession {
   def build(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

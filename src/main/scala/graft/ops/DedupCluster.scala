@@ -245,9 +245,12 @@ object DedupCluster {
     * IS its component minimum, so `m(a) = root` on both sides and each
     * round re-emits the same (root, member) edges). A canonical edge
     * set (u < v, distinct) is a star forest iff no node appears both as
-    * a parent `u` and a child `v`, which one role-bitmask aggregate per
-    * materialization tests exactly — the same single action that
-    * materializes the lazy checkpoint. Versus the previous two-tier
+    * a parent `u` and a child `v` AND no child appears on two edges
+    * (two parents: `{(1,3),(2,3)}` has no node in both roles, yet 3
+    * joins two stars into one component). One aggregate per node — the
+    * role bitmask plus the count of its child-role edges — tests both
+    * exactly, in the same single action that materializes the lazy
+    * checkpoint. Versus the previous two-tier
     * (count, xor-hash) signature + `except` confirm, the structural
     * test needs no collision argument AND detects convergence one full
     * iteration earlier: set-equality can only see the fixpoint by
@@ -275,16 +278,18 @@ object DedupCluster {
         println(f"[cc] $label: ${(System.nanoTime() - t0) / 1e9}%.3f s"); r
       }
     // Star-forest test on a canonical (u < v, distinct) edge set: no
-    // node in both the parent (u) and child (v) role. One exchange by
-    // node (partial bit_or per partition first), then take(1) — and the
-    // action doubles as the checkpoint materialization.
+    // node in both the parent (u) and child (v) role, and no child with
+    // two parents. One exchange by node (partial aggregates per
+    // partition first), then take(1) — and the action doubles as the
+    // checkpoint materialization.
     def isStarForest(df: DataFrame): Boolean =
       df.select(explode(array(
           struct(col("u").as("n"), lit(1).as("r")),
           struct(col("v").as("n"), lit(2).as("r")))).as("p"))
         .groupBy(col("p.n"))
-        .agg(expr("bit_or(p.r)").as("roles"))
-        .filter(col("roles") === 3)
+        .agg(expr("bit_or(p.r)").as("roles"),
+          count(when(col("p.r") === 2, 1)).as("parents"))
+        .filter(col("roles") === 3 || col("parents") >= 2)
         .isEmpty
     var e = edges
       .select(least(col("u"), col("v")).as("u"),

@@ -2,7 +2,7 @@ package graft.pharma
 
 import org.apache.spark.ml.{Pipeline, PipelineModel}
 import org.apache.spark.ml.classification.{RandomForestClassificationModel, RandomForestClassifier}
-import org.apache.spark.ml.evaluation.{BinaryClassificationEvaluator, MulticlassClassificationEvaluator}
+import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
 import org.apache.spark.ml.feature.{StringIndexer, VectorAssembler}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -15,13 +15,23 @@ import org.apache.spark.sql.expressions.Window
   * scales with the cluster instead of driver memory.
   *
   * Parity mapping (SURVEY.md §2.11):
-  *  - categorical encoding: StringIndexer (scalable) as default; the
-  *    bit-exact dense_rank twin of the reference's global-window encoder
-  *    (…py:101-114) is [[denseRankEncode]] — parity tests only, since an
-  *    un-partitioned window single-partitions the data at scale
+  *  - categorical encoding: one multi-column StringIndexer over the four
+  *    categorical columns (scalable) as default; the bit-exact dense_rank
+  *    twin of the reference's global-window encoder (…py:101-114) is
+  *    [[denseRankEncode]] — parity tests only, since an un-partitioned
+  *    window single-partitions the data at scale
   *  - class_weight {0:1, 1:6.1} → weightCol (MLlib has no weight dict)
   *  - RF 100 trees, depth 10, seed 42 (…py:193-199)
-  *  - accuracy + areaUnderROC evaluators (…py:208-221)
+  *  - accuracy + areaUnderROC (…py:208-221): AUC from the MLlib
+  *    evaluator, accuracy and the per-class report from one confusion
+  *    aggregate
+  *  - pickle save/reload-verify (…py:276-323): MLlib native writers, and
+  *    the reloaded model must reproduce the saved model's prediction on
+  *    every test row (a row-wise compare in one job)
+  *
+  * The stage is driver-bound at feed sizes (each Spark job and query
+  * costs more planning than executor time), so every step is shaped to
+  * run as few jobs as it can.
   */
 object InsuranceModel {
 
@@ -39,20 +49,23 @@ object InsuranceModel {
     }
 
   /** Scalable encoding + assembly + weighted RF as one MLlib Pipeline.
-    * StringIndexer orders labels by frequency (different index values than
-    * dense_rank — never compare across encoders, SURVEY.md §7.4.2). */
+    * One multi-column StringIndexer fits all four label lists in one pass
+    * (and saves/loads as one stage); each column's labels are ordered by
+    * frequency, ties alphabetical, exactly as four single-column fits
+    * would order them (different index values than dense_rank — never
+    * compare across encoders, SURVEY.md §7.4.2). */
   def pipeline(): Pipeline = {
-    val indexers = FeatureCols.map { c =>
-      new StringIndexer().setInputCol(c).setOutputCol(s"${c}_idx")
-        .setHandleInvalid("keep")
-    }
+    val indexer = new StringIndexer()
+      .setInputCols(FeatureCols.toArray)
+      .setOutputCols(FeatureCols.map(_ + "_idx").toArray)
+      .setHandleInvalid("keep")
     val assembler = new VectorAssembler()
       .setInputCols(("price" +: FeatureCols.map(_ + "_idx")).toArray)
       .setOutputCol("features")
     val rf = new RandomForestClassifier()
       .setNumTrees(100).setMaxDepth(10).setSeed(42)
       .setLabelCol("label").setFeaturesCol("features").setWeightCol("w")
-    new Pipeline().setStages((indexers :+ assembler :+ rf).toArray)
+    new Pipeline().setStages(Array(indexer, assembler, rf))
   }
 
   /** Label + weight columns: covered → 0.0, not covered → 1.0 with the
@@ -89,40 +102,46 @@ object InsuranceModel {
     * one distributed aggregate over the confusion counts (the full
     * sklearn classification_report surface,
     * ML_Model_Complete…py:214-221: P, R, f1-score, support). */
-  def classStats(predictions: DataFrame, cls: Double): ClassStats = {
-    val row = predictions.agg(
-      count(when(col("prediction") === cls && col("label") === cls, 1)).as("tp"),
-      count(when(col("prediction") === cls && col("label") =!= cls, 1)).as("fp"),
-      count(when(col("prediction") =!= cls && col("label") === cls, 1)).as("fn"))
-      .head()
-    val (tp, fp, fn) = (row.getLong(0).toDouble, row.getLong(1).toDouble, row.getLong(2).toDouble)
-    val p = if (tp + fp == 0) 0.0 else tp / (tp + fp)
-    val r = if (tp + fn == 0) 0.0 else tp / (tp + fn)
-    ClassStats(p, r,
-      if (p + r == 0) 0.0 else 2 * p * r / (p + r),
-      (tp + fn).toLong)
+  def classStats(predictions: DataFrame, cls: Double): ClassStats =
+    confusion(predictions, Seq(cls)).head.stats
+
+  private final case class Confusion(tp: Long, fp: Long, fn: Long) {
+    def stats: ClassStats = {
+      val p = if (tp + fp == 0) 0.0 else tp.toDouble / (tp + fp)
+      val r = if (tp + fn == 0) 0.0 else tp.toDouble / (tp + fn)
+      ClassStats(p, r, if (p + r == 0) 0.0 else 2 * p * r / (p + r), tp + fn)
+    }
+  }
+
+  /** tp/fp/fn of every class in `classes`, side by side in ONE aggregate
+    * (one job however many classes are asked for). */
+  private def confusion(predictions: DataFrame, classes: Seq[Double]): Seq[Confusion] = {
+    val counts = classes.flatMap { cls =>
+      Seq(
+        count(when(col("prediction") === cls && col("label") === cls, 1)),
+        count(when(col("prediction") === cls && col("label") =!= cls, 1)),
+        count(when(col("prediction") =!= cls && col("label") === cls, 1)))
+    }
+    val row = predictions.agg(counts.head, counts.tail: _*).head()
+    classes.indices.map(i =>
+      Confusion(row.getLong(3 * i), row.getLong(3 * i + 1), row.getLong(3 * i + 2)))
   }
 
   /** Model persistence round-trip (reference's pickle save/reload-verify,
     * ML_Model_Complete…py:276-323, via MLlib native writers): save,
-    * reload, and check the reloaded model reproduces every prediction. */
+    * reload, and check the reloaded model reproduces the prediction of
+    * every row. One chained plan pairs each test row with the saved
+    * model's prediction, scores the pair with the reloaded model and
+    * looks for a row where the two differ (null-safe): one job, no
+    * shuffle, no cache, and a row-wise compare — stronger than a
+    * multiset compare, which two models swapping predictions between
+    * rows would pass. */
   def persistenceRoundTrip(model: PipelineModel, test: DataFrame): Boolean = {
     val dir = java.nio.file.Files.createTempDirectory("graft_rf_model")
     try {
       val path = dir.resolve("model").toString
       model.write.overwrite().save(path)
-      val reloaded = PipelineModel.load(path)
-      def preds(m: PipelineModel) = m.transform(test).select(
-        col("price"), col("form"), col("therapeutic_class"),
-        col("pharmacological_class"), col("lab_name"), col("prediction"))
-      // multiset compare: equal counts + one-directional exceptAll is
-      // multiset equality (plain except() is set-based and would miss a
-      // flipped prediction on one of two rows sharing a feature tuple);
-      // cache so each scoring pipeline runs once
-      val a = preds(model).cache()
-      val b = preds(reloaded).cache()
-      try a.count() == b.count() && a.exceptAll(b).isEmpty
-      finally { a.unpersist(); b.unpersist() }
+      sameRowPredictions(model, PipelineModel.load(path), test)
     } finally {
       // the saved PipelineModel is scratch — don't accumulate one per run
       import scala.jdk.CollectionConverters._
@@ -133,23 +152,36 @@ object InsuranceModel {
     }
   }
 
+  /** True iff `b` predicts what `a` predicts on every row of `df`. */
+  private[graft] def sameRowPredictions(
+      a: PipelineModel, b: PipelineModel, df: DataFrame): Boolean = {
+    val scoredByA = a.transform(df)
+      .select(df.columns.map(col).toSeq :+ col("prediction").as("__expected"): _*)
+    b.transform(scoredByA)
+      .filter(!(col("prediction") <=> col("__expected")))
+      .isEmpty
+  }
+
   /** Train/evaluate with the reference's 80/20 seed-42 split. */
   def trainAndEvaluate(mlData: DataFrame): Metrics = {
     val prepared = withLabelAndWeight(mlData).cache()
     val Array(train, test) = prepared.randomSplit(Array(0.8, 0.2), seed = 42)
     val model = pipeline().fit(train)
     val predictions = model.transform(test).cache()
-    val accuracy = new MulticlassClassificationEvaluator()
-      .setLabelCol("label").setPredictionCol("prediction")
-      .setMetricName("accuracy").evaluate(predictions)
     val auc = new BinaryClassificationEvaluator()
       .setLabelCol("label").setRawPredictionCol("rawPrediction")
       .setMetricName("areaUnderROC").evaluate(predictions)
+    // labels are exactly 0.0/1.0 (withLabelAndWeight), so the two
+    // supports partition the test split and the two true-positive counts
+    // are its correct predictions: accuracy is correct / rows, the same
+    // quotient of two exact counts the multiclass evaluator divides
+    val Seq(covered, notCovered) = confusion(predictions, Seq(0.0, 1.0))
+    val testRows = covered.tp + covered.fn + notCovered.tp + notCovered.fn
+    val accuracy = (covered.tp + notCovered.tp).toDouble / testRows
     val rf = model.stages.last.asInstanceOf[RandomForestClassificationModel]
-    val m = Metrics(accuracy, auc, train.count(), test.count(),
+    val m = Metrics(accuracy, auc, train.count(), testRows,
       rf.featureImportances.toArray,
-      covered = classStats(predictions, 0.0),
-      notCovered = classStats(predictions, 1.0),
+      covered = covered.stats, notCovered = notCovered.stats,
       reloadOk = persistenceRoundTrip(model, test))
     prepared.unpersist(); predictions.unpersist()
     m

@@ -70,6 +70,34 @@ class ClusterSpec extends SparkTestBase {
     }
   }
 
+  test("a child with two parents is not a star forest") {
+    // no node is both a parent (u) and a child (v) in either edge set,
+    // yet each child links two parents into one component
+    assert(ccMap(Seq((1L, 3L), (2L, 3L))) === Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
+    val edges = Seq((2L, 6L), (5L, 6L), (3L, 7L), (5L, 7L))
+    assert(ccMap(edges) === unionFind(edges))
+    assert(ccMap(edges).values.toSet === Set(2L))
+  }
+
+  test("role-bipartite graphs match a driver-side union-find") {
+    // every parent id below every child id, so no node ever holds both
+    // roles: only the two-parent condition can reject these edge sets
+    val genEdges = for {
+      parents <- Gen.choose(1, 12)
+      children <- Gen.choose(1, 20)
+      m <- Gen.choose(1, 40)
+      edges <- Gen.listOfN(m, for {
+        u <- Gen.choose(0L, parents.toLong - 1)
+        v <- Gen.choose(100L, 100L + children - 1)
+      } yield (u, v))
+    } yield edges
+    (1L to 8L).foreach { seed =>
+      val edges = genEdges
+        .pureApply(Gen.Parameters.default, org.scalacheck.rng.Seed(seed))
+      assert(ccMap(edges) === unionFind(edges), s"seed=$seed edges=$edges")
+    }
+  }
+
   test("shared-shingle edges link copies, not unrelated docs") {
     val docs = Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu nu xi"),

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.ml.feature.StringIndexer
 import org.apache.spark.sql.functions._
 
 import graft.pharma.{Cleaning, Dashboard, InsuranceModel, MedsFeed, PharmaFixture}
@@ -8,7 +9,9 @@ import graft.pharma.{Cleaning, Dashboard, InsuranceModel, MedsFeed, PharmaFixtur
   * per-class evaluation, the per-row predict surface, and the
   * save/reload verification the reference performs manually
   * (ML_Model_Complete…py:208-323). sklearn→MLlib parity is statistical,
-  * not bit-exact (SURVEY.md §7.4.3), so floors, not exact values. */
+  * not bit-exact (SURVEY.md §7.4.3), so floors, not exact values — except
+  * where MLlib's own figures are pinned so that a rework of the stage
+  * must reproduce them bit for bit. */
 class PharmaMlSpec extends SparkTestBase {
 
   private lazy val mlData = Dashboard.mlDataset(Cleaning.all(
@@ -35,6 +38,43 @@ class PharmaMlSpec extends SparkTestBase {
     // supports partition the test split exactly
     assert(m.covered.support + m.notCovered.support === m.testRows)
     assert(m.reloadOk, "reloaded model must reproduce every prediction")
+  }
+
+  test("train/evaluate: exact MLlib figures on the fixture") {
+    // recorded from the pipeline with one StringIndexer per column, the
+    // multiclass accuracy evaluator and one classStats job per class:
+    // the one-indexer, one-aggregate stage must reproduce them exactly
+    val m = InsuranceModel.trainAndEvaluate(mlData)
+    assert(m.accuracy === 0.46153846153846156)
+    assert(m.auc === 0.7151515151515151)
+    assert((m.trainRows, m.testRows) === ((135L, 26L)))
+    assert(m.featureImportances.toSeq === Seq(0.549347809694748,
+      0.2831965950791177, 0.008975523016503026, 0.07504890360431969,
+      0.08343116860531151))
+    assert(m.covered === InsuranceModel.ClassStats(
+      0.5714285714285714, 0.26666666666666666, 0.36363636363636365, 15L))
+    assert(m.notCovered === InsuranceModel.ClassStats(
+      0.42105263157894735, 0.7272727272727273, 0.5333333333333333, 11L))
+  }
+
+  test("one multi-column indexer learns the labels of four single-column ones") {
+    val data = InsuranceModel.withLabelAndWeight(mlData)
+    val indexer = InsuranceModel.pipeline().getStages.head
+      .asInstanceOf[StringIndexer].fit(data)
+    val perColumn = InsuranceModel.FeatureCols.map { c =>
+      new StringIndexer().setInputCol(c).setOutputCol(s"${c}_idx")
+        .setHandleInvalid("keep").fit(data).labelsArray.head.toSeq
+    }
+    assert(indexer.labelsArray.map(_.toSeq).toSeq === perColumn)
+  }
+
+  test("row-wise reload compare rejects a model that disagrees on a row") {
+    val data = InsuranceModel.withLabelAndWeight(mlData)
+    val model = InsuranceModel.pipeline().fit(data)
+    val flipped = InsuranceModel.pipeline()
+      .fit(data.withColumn("label", lit(1.0) - col("label")))
+    assert(InsuranceModel.sameRowPredictions(model, model, data))
+    assert(!InsuranceModel.sameRowPredictions(model, flipped, data))
   }
 
   test("denseRankEncode: bit-exact parity with the reference's global " +

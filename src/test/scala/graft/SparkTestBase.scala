@@ -30,12 +30,16 @@ trait SparkTestBase extends AnyFunSuite {
 object SparkTestBase {
   lazy val session: SparkSession = {
     val wh = java.nio.file.Files.createTempDirectory("graft_test_wh").toString
-    SparkSession.builder()
+    val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir", wh)
       .getOrCreate()
+    // Spark logs every job, stage and task at INFO; at WARN a failing
+    // test's output is not buried under them
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }
